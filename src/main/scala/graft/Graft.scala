@@ -116,6 +116,44 @@ object Graft {
     spark
   }
 
+  /** Run `body` with `settings` in force on the session, then put each
+    * key back exactly as it was, also when `body` throws: a key that
+    * was set gets its old value, a key that was unset is unset again.
+    * The snapshot reads explicitly set values only (`conf.getAll`);
+    * `conf.get(key, default)` or `getOption` would return a default
+    * and the restore would then pin it on the session.
+    */
+  def withConf[A](spark: SparkSession, settings: (String, String)*)(
+      body: => A): A = {
+    val explicit = spark.conf.getAll
+    val saved = settings.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The local session the engine's mains (`Bench`, `Verify`,
+    * `Explain`) run on: `local[n]` with `n` shuffle partitions, where
+    * `n` is SPARK_GRAFT_CPUS (4 when unset); UI off, UTC, the optimizer
+    * exclusions and the native functions registered.
+    */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.optimizer.excludedRules", excludedOptimizerRules)
+      .getOrCreate()
+    registerFunctions(spark)
+    spark
+  }
+
   /** As-of join convenience forwarding. */
   def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
                leftTs: String, rightTs: String,

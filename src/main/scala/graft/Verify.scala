@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,20 +7,8 @@ object Verify {
     // args: <sfDir> <outDir> [queryName...] — names filter the dump for
     // local iteration; the driver always passes exactly two
     val Array(sfDir, outDir, only @ _*) = args: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Graft.excludedOptimizerRules)
-      .getOrCreate()
+    val spark = Graft.localSession()
     spark.sparkContext.setLogLevel("WARN")
-    // deterministic from query one: native functions AND the
-    // fold→kernel optimizer rewrite are active for every plan, not
-    // from whichever query happens to call register() first
-    graft.functions.GraftFunctions.register(spark)
     new java.io.File(outDir).mkdirs()
     val selected =
       if (only.isEmpty) SparkEntry.queries

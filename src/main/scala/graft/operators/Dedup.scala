@@ -316,8 +316,8 @@ object Dedup {
       .union(edgesM.select(col(b).as("src"), col(a).as("dst")))
       .coalesce(graphParts)
       .persist()
-    spark.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
-    try {
+    graft.Graft.withConf(spark,
+        "spark.sql.shuffle.partitions" -> graphParts.toString) {
     // Each sweep references the previous labels frame several times
     // (neighbor join, least(), change count), so chaining plain lazy
     // plans doubles the plan tree per sweep — 2^sweeps nodes by sweep 30.
@@ -368,7 +368,7 @@ object Dedup {
       connectedComponentsContraction(edgesM, a, b)
     else
       labels.select(col("id"), col("label").as("component"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
+    }
   }
 
   /** Alternating large-star/small-star contraction (the public

@@ -10,7 +10,7 @@ import graft.operators.{Corpus, Dedup, TextAnalysis}
   * through [[graft.operators.Dedup]] with a DuckDB oracle replicating
   * the same md5-derived hashing (engine-portable by construction).
   */
-object DedupQueries {
+object DedupQueries extends QueryModule {
   import Tables._
 
   private val minhashK = 8
@@ -361,8 +361,6 @@ object DedupQueries {
           bands): _*)
       val long = banded.select(col("doc_id"), explode(array(
         (0 until bands).map(b => col(s"band_$b")): _*)).as("band"))
-      val tmp = Stage.tempDir("graft-c31-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       // 3 doc-id-range chunks arriving in order (durableChunkFeed
       // pins each chunk's mtime — arrival order is a property of the
       // staged content, not a race on write timestamps). The 1-row
@@ -386,24 +384,13 @@ object DedupQueries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("band",
           org.apache.spark.sql.types.StringType)))
-      val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-          .as[graft.streaming.BandAdmission.BandRow]
-        graft.streaming.BandAdmission.flagStream(in)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-              graft.streaming.BandAdmission.BandFlag], _: Long) =>
-            batch.write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.read.parquet(out).groupBy("doc_id")
+      EventFeed.runStream(s, "graft-c31-", EventFeed.statePartitions,
+          "append", EventFeed.AppendBatches)(
+        graft.streaming.BandAdmission.flagStream(
+          s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(feed)
+            .as[graft.streaming.BandAdmission.BandRow]))
+        .output.groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"),
           max(col("dup")).as("is_neardup"))
     }),
@@ -463,8 +450,6 @@ object DedupQueries {
         // late-row filter at the initial zero watermark
         .withColumn("ts",
           timestamp_micros((col("doc_id") + 1) * 1000000L))
-      val tmp = Stage.tempDir("graft-c35-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       // the horizon h is re-derived OUTSIDE the staged build too (the
       // handler needs it every run); the 1-row max it hangs off is a
       // durable scalar — reuse is a file read, not a Spark job
@@ -491,26 +476,15 @@ object DedupQueries {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("ts",
           org.apache.spark.sql.types.TimestampType)))
-      val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-          .withWatermark("ts", "0 seconds")
-          .as[graft.streaming.BandAdmission.BandRowT]
-        graft.streaming.BandAdmission
-          .flagStreamTtl(in, h, drainAfterMs = (mx + 1) * 1000L)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-              graft.streaming.BandAdmission.BandFlag], _: Long) =>
-            batch.write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.read.parquet(out).groupBy("doc_id")
+      EventFeed.runStream(s, "graft-c35-", EventFeed.statePartitions,
+          "append", EventFeed.AppendBatches)(
+        graft.streaming.BandAdmission.flagStreamTtl(
+          s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(feed)
+            .withWatermark("ts", "0 seconds")
+            .as[graft.streaming.BandAdmission.BandRowT],
+          h, drainAfterMs = (mx + 1) * 1000L))
+        .output.groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"),
           max(col("dup")).as("is_neardup"))
     }))

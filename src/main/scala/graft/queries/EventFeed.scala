@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,6 +18,10 @@ import graft.streaming.Attribution
   * EventTimeTimeout state eviction fires deterministically, and the
   * final drain enumerates surviving state — making the state-store
   * SIZE part of the judged output instead of an assertion.
+  *
+  * [[runStream]] is the bounded drain every streaming c-query runs
+  * through unless it judges a choreography of its own (restarts,
+  * redelivery, poll cycles).
   */
 object EventFeed {
   /** Number of DATA chunks (micro-batches) the feed splits the events
@@ -40,11 +45,10 @@ object EventFeed {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** A built feed: chunk/sentinel files under `feed`, data ts bounds,
-    * and the stream's output/checkpoint dirs.
+  /** A built feed: chunk/sentinel files under `feed`, data ts bounds
+    * and the attribution window.
     */
-  case class Built(feed: String, loUs: Long, hiUs: Long,
-    windowUs: Long, out: String, ckpt: String)
+  case class Built(feed: String, loUs: Long, hiUs: Long, windowUs: Long)
 
   /** Write the chunked feed (+ sentinels) with pinned mtimes.
     *
@@ -134,38 +138,83 @@ object EventFeed {
     }
     val Array(lo0, hi0) = new String(java.nio.file.Files.readAllBytes(
       fix.resolve("_FEED_OK")), "UTF-8").split(" ").map(_.toLong)
-    val tmp = Stage.tempDir(tmpPrefix).toString
-    Built(fix.resolve("feed").toString, lo0, hi0, windowOf(lo0, hi0),
-      s"$tmp/out", s"$tmp/ckpt")
+    Built(fix.resolve("feed").toString, lo0, hi0, windowOf(lo0, hi0))
   }
 
-  /** Run `transform` over the feed as a real micro-batch stream
-    * (one file per trigger, AvailableNow) and return the appended
-    * output as a batch frame.
+  /** The built feed as a stream: one file per micro-batch, event
+    * time `ts` watermarked with zero delay.
     */
-  def runStream[T](s: SparkSession, b: Built,
-      transform: org.apache.spark.sql.Dataset[Attribution.EvW] =>
-        org.apache.spark.sql.Dataset[T]): DataFrame = {
+  def stream(s: SparkSession, b: Built): Dataset[Attribution.EvW] = {
     import s.implicits._
-    val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val in = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(b.feed)
-        .withWatermark("ts", "0 seconds")
-        .as[Attribution.EvW]
-      transform(in)
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[T], _: Long) =>
-            batch.toDF().write.mode("append").parquet(b.out); ()
-        }
-        .option("checkpointLocation", b.ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(b.feed).withWatermark("ts", "0 seconds").as[Attribution.EvW]
+  }
+
+  /** Session conf for a stateful [[runStream]]: every stateful operator
+    * opens one state store per shuffle partition per micro-batch (a
+    * stream-stream join opens four), and each store pays checkpoint
+    * file I/O per batch. The per-deployment knob is exactly
+    * `spark.sql.shuffle.partitions` at stream start — thousands on a
+    * real cluster, 8 for these ~10⁵-row judged feeds. Results are
+    * partition-count invariant (that invariance IS what the oracle hash
+    * checks); only the fixed per-store overhead changes.
+    */
+  val statePartitions: Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> "8")
+
+  /** [[statePartitions]] on the RocksDB state-store provider, which
+    * transformWithState requires (multiple column families); the other
+    * RocksDB twins keep it to exercise the durable provider.
+    */
+  val rocksDbState: Seq[(String, String)] = statePartitions :+
+    ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Where a [[runStream]]'s micro-batches go. */
+  sealed trait Sink
+  /** Spark's parquet file sink at `out` (append mode). */
+  case object FileSink extends Sink
+  /** foreachBatch appending each batch to `out` as parquet. */
+  case object AppendBatches extends Sink
+  /** foreachBatch calling `f(batch, batchId, out)`. */
+  final case class EachBatch(f: (DataFrame, Long, String) => Unit)
+    extends Sink
+  /** The noop sink: the run's product is its checkpoint's state. */
+  case object NoSink extends Sink
+
+  /** A finished [[runStream]]: its sink and checkpoint dirs. */
+  final case class Run(s: SparkSession, out: String, ckpt: String) {
+    /** The parquet the sink left under `out`. */
+    def output: DataFrame = s.read.parquet(out)
+  }
+
+  /** Drain `query` once as a real micro-batch stream (`Trigger
+    * .AvailableNow`) into `sink` in output `mode`, with `conf` in force
+    * on the session for the run and restored exactly after it (`Nil`
+    * for a stateless drain, or one whose foreachBatch runs batch jobs at
+    * the session's own partition count). Output and checkpoint live in
+    * a fresh [[Stage.tempDir]] named by `tmpPrefix`.
+    */
+  def runStream[T](s: SparkSession, tmpPrefix: String,
+      conf: Seq[(String, String)], mode: String, sink: Sink)(
+      query: => Dataset[T]): Run = {
+    val tmp = Stage.tempDir(tmpPrefix).toString
+    val run = Run(s, s"$tmp/out", s"$tmp/ckpt")
+    graft.Graft.withConf(s, conf: _*) {
+      val w = query.writeStream
+      (sink match {
+        case FileSink => w.format("parquet").option("path", run.out)
+        case AppendBatches => w.foreachBatch { (b: Dataset[T], _: Long) =>
+          b.toDF().write.mode("append").parquet(run.out); () }
+        case EachBatch(f) => w.foreachBatch { (b: Dataset[T], id: Long) =>
+          f(b.toDF(), id, run.out) }
+        case NoSink => w.format("noop")
+      }).option("checkpointLocation", run.ckpt)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow)
         .start().awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.read.parquet(b.out)
+    }
+    run
   }
 
   /** Feed → [[Attribution.attributeWindowed]] → per-touch-type rollup. */
@@ -174,9 +223,9 @@ object EventFeed {
       windowOf: (Long, Long) => Long,
       sentinelGaps: Seq[Long]): DataFrame = {
     val b = build(s, dir, tmpPrefix, perCampaign, windowOf, sentinelGaps)
-    runStream(s, b, (in: org.apache.spark.sql.Dataset[Attribution.EvW]) =>
-      Attribution.attributeWindowed(in, b.windowUs,
-        drainAfterMs = b.hiUs / 1000L))
+    runStream(s, tmpPrefix, statePartitions, "append", AppendBatches)(
+      Attribution.attributeWindowed(stream(s, b), b.windowUs,
+        drainAfterMs = b.hiUs / 1000L)).output
       .groupBy(col("touch_type"))
       .agg(count(lit(1)).as("conversions"),
         Tables.dsum(col("value"), 2).as("attributed_value"))
@@ -190,8 +239,8 @@ object EventFeed {
       tmpPrefix: String): DataFrame = {
     val b = build(s, dir, tmpPrefix, perCampaign = false,
       windowOf = (_, _) => 0L, sentinelGaps = Seq.empty)
-    runStream(s, b, (in: org.apache.spark.sql.Dataset[Attribution.EvW]) =>
-      Attribution.multiTouch(in))
+    runStream(s, tmpPrefix, statePartitions, "append", AppendBatches)(
+      Attribution.multiTouch(stream(s, b))).output
       .groupBy(col("touch_type"))
       .agg((sum(col("w")).cast("double") / lit(1000000.0))
           .as("conversions"),

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.cdc.Debezium
 import graft.sinks.Sinks
 import graft.streaming.Pipeline
+import EventFeed.{runStream, statePartitions, rocksDbState, FileSink,
+  AppendBatches, EachBatch}
 
 /** Judged queries that drive the STREAMING RUNTIME itself (SURVEY.md
   * §2.1 S2, §2.4 C5/C6) — not batch re-statements of its transforms.
@@ -21,30 +23,13 @@ import graft.streaming.Pipeline
   * `Trigger.AvailableNow` instead of the 60 s ProcessingTime trigger —
   * same engine, bounded run).
   */
-object RuntimeQueries {
+object RuntimeQueries extends QueryModule {
   import Tables._
 
   /** The (value, topic) schema a Kafka source presents downstream. */
   private val feedSchema = StructType(Seq(
     StructField("value", StringType),
     StructField("topic", StringType)))
-
-  /** Run a STATEFUL streaming leg with the shuffle-partition count sized
-    * to the feed's volume: every stateful operator opens one state store
-    * per shuffle partition per micro-batch (a stream-stream join opens
-    * four), and each store pays checkpoint file I/O per batch. The
-    * per-deployment knob is exactly `spark.sql.shuffle.partitions` at
-    * stream start — thousands on a real cluster, 8 for these ~10⁵-row
-    * judged feeds. Delivery semantics and results are partition-count
-    * invariant (that invariance IS what the oracle hash checks); only
-    * the fixed per-store overhead changes. The conf is restored after
-    * the bounded run so batch queries in the same session are untouched.
-    */
-  private[queries] def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S2+C5+C6+C7 end to end: snapshot envelopes land in the feed, one
@@ -125,8 +110,6 @@ object RuntimeQueries {
     // hour are provably withheld — visible watermark semantics, judged
     "c9_stream_window" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("ts", "event_id")
-      val tmp = Stage.tempDir("graft-c9-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val cut = lit("2024-01-21").cast("timestamp")
       val feed = Stage.durableChunkFeed("feed-c9", dir)(Seq(
         ev.where(col("ts") < cut),
@@ -136,14 +119,8 @@ object RuntimeQueries {
         StructField("event_id", org.apache.spark.sql.types.LongType)))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(feed)
-      withStatePartitions(s, 8) {
-        Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      s.read.parquet(out)
+      runStream(s, "graft-c9-", statePartitions, "append", FileSink)(
+        Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour")).output
     }),
 
     // LATE-DATA semantics through the RUNTIME — the one watermark
@@ -175,8 +152,6 @@ object RuntimeQueries {
     // the property that keeps the operator finite at 100 TB/day
     "c24_stream_late" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("ts", "event_id")
-      val tmp = Stage.tempDir("graft-c24-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val cutA = lit("2024-01-14 00:30:00").cast("timestamp")
       val cutB = lit("2024-01-21 00:30:00").cast("timestamp")
       val evictedLate = ev.where(
@@ -201,14 +176,8 @@ object RuntimeQueries {
         StructField("event_id", org.apache.spark.sql.types.LongType)))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(feed)
-      withStatePartitions(s, 8) {
-        Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      s.read.parquet(out)
+      runStream(s, "graft-c24-", statePartitions, "append", FileSink)(
+        Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour")).output
     }),
 
     // STATEFUL RESTART through the RUNTIME — checkpoint recovery for a
@@ -234,7 +203,7 @@ object RuntimeQueries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", org.apache.spark.sql.types.LongType)))
-      def runEngine(): Unit = withStatePartitions(s, 8) {
+      def runEngine(): Unit = graft.Graft.withConf(s, statePartitions: _*) {
         Pipeline.windowedCounts(
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(feed),
@@ -291,8 +260,6 @@ object RuntimeQueries {
     // both break it
     "c10_stream_dedup" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("ts", "event_id", "user_id")
-      val tmp = Stage.tempDir("graft-c10-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val cut = lit("2024-01-21").cast("timestamp")
       def leg(rows: DataFrame): DataFrame =
         rows.unionAll(rows.where(col("event_id") % 7 === 0))
@@ -303,20 +270,16 @@ object RuntimeQueries {
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", org.apache.spark.sql.types.LongType),
         StructField("user_id", org.apache.spark.sql.types.LongType)))
-      withStatePartitions(s, 8) {
+      val run = runStream(s, "graft-c10-", statePartitions, "append",
+          FileSink)(
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(feed)
           .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      val sunk = s.read.parquet(out)
+          .dropDuplicatesWithinWatermark("event_id"))
+      val sunk = run.output
       // audit counts from parquet FOOTERS (c20 discipline): the sink
       // and the events table both already materialize their row counts
-      val dedupedOnce = Tables.parquetRowCountAt(s, out) ==
+      val dedupedOnce = Tables.parquetRowCountAt(s, run.out) ==
         Tables.parquetRowCount(s, dir, "events")
       sunk.select(col("ts"), col("event_id"), col("user_id"),
         lit(dedupedOnce).as("deduped_once"))
@@ -333,8 +296,6 @@ object RuntimeQueries {
     // state eviction changes WHEN rows leave memory, never the result
     "c11_stream_join" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val tmp = Stage.tempDir("graft-c11-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val fix = Stage.durableSplitFeed("feed-c11", dir)(Seq(
         "views" -> ev.where(col("event_type") === "view")
           .select(col("ts").as("v_ts"), col("event_id").as("v_event_id"),
@@ -349,18 +310,13 @@ object RuntimeQueries {
         StructField("v_event_id", longT), StructField("user_id", longT)))
       val cSchema = StructType(Seq(StructField("c_ts", tsT),
         StructField("c_event_id", longT), StructField("user_id", longT)))
-      withStatePartitions(s, 8) {
+      runStream(s, "graft-c11-", statePartitions, "append", FileSink)(
         Pipeline.intervalJoin(
           s.readStream.schema(vSchema).parquet(vDir), "v_ts",
           s.readStream.schema(cSchema).parquet(cDir), "c_ts",
           key = "user_id", watermark = "1 hour", within = "30 minutes")
-          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      s.read.parquet(out)
+          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts"))
+        .output
     }),
 
     // Stream-STATIC enrichment through the RUNTIME: the event stream
@@ -374,8 +330,6 @@ object RuntimeQueries {
       val ev = Tables.events(s, dir)
       val dim = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      val tmp = Stage.tempDir("graft-c14-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val feed = Stage.durableChunkFeed("feed-c14", dir)(Seq(
         ev.select("ts", "event_id", "user_id", "event_type")))
       val tsT = org.apache.spark.sql.types.TimestampType
@@ -383,15 +337,11 @@ object RuntimeQueries {
       val schema = StructType(Seq(StructField("ts", tsT),
         StructField("event_id", longT), StructField("user_id", longT),
         StructField("event_type", StringType)))
-      s.readStream.schema(schema).parquet(feed)
-        .join(broadcast(dim), col("user_id") === col("c_custkey"))
-        .select("ts", "event_id", "user_id", "event_type", "c_name",
-          "c_mktsegment")
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow).start()
-        .awaitTermination()
-      s.read.parquet(out)
+      runStream(s, "graft-c14-", Nil, "append", FileSink)(
+        s.readStream.schema(schema).parquet(feed)
+          .join(broadcast(dim), col("user_id") === col("c_custkey"))
+          .select("ts", "event_id", "user_id", "event_type", "c_name",
+            "c_mktsegment")).output
     }),
 
     // CUSTOM state through the RUNTIME ([[OhlcState.ohlcStream]],
@@ -407,8 +357,6 @@ object RuntimeQueries {
     "c17_stream_ohlc" -> ((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
-      val tmp = Stage.tempDir("graft-c17-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val feed = Stage.durableChunkFeed("feed-c17", dir)(Seq(
         ev.select(
           concat(col("event_type"), lit("-"),
@@ -423,20 +371,10 @@ object RuntimeQueries {
         StructField("epochMs", longT)))
       val trades = s.readStream.schema(schema).parquet(feed)
         .as[graft.streaming.OhlcState.Trade]
-      withStatePartitions(s, 8) {
+      runStream(s, "graft-c17-", statePartitions, "update", AppendBatches)(
         graft.streaming.OhlcState
-          .ohlcStream(trades, barMs = 3600L * 1000, idleTimeout = None)
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[
-               graft.streaming.OhlcState.OhlcBar], _: Long) =>
-              batch.write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .outputMode("update").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      s.read.parquet(out)
+          .ohlcStream(trades, barMs = 3600L * 1000, idleTimeout = None))
+        .output
         .select(col("symbol"), col("barStartMs"), col("open"), col("high"),
           col("low"), col("close"), col("volume").cast("long").as("volume_k"),
           col("n_trades"))
@@ -500,8 +438,6 @@ object RuntimeQueries {
     // the upsert cost is ∝ changed windows per batch, never history
     "c26_stream_update_mv" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("ts", "event_id")
-      val tmp = Stage.tempDir("graft-c26-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val cut = lit("2024-01-21 00:30:00").cast("timestamp")
       val feed = Stage.durableChunkFeed("feed-c26", dir)(Seq(
         ev.where(col("ts") < cut),
@@ -509,21 +445,14 @@ object RuntimeQueries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", org.apache.spark.sql.types.LongType)))
-      withStatePartitions(s, 8) {
+      val run = runStream(s, "graft-c26-", statePartitions, "update",
+          EachBatch((batch, epoch, out) =>
+            Sinks.appendParquet(batch.withColumn("epoch", lit(epoch)), out)))(
         Pipeline.windowedCounts(
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(feed),
-          "ts", "1 hour", "1 hour")
-          .writeStream.outputMode("update")
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            Sinks.appendParquet(
-              batch.withColumn("epoch", lit(epoch)), out)
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow).start().awaitTermination()
-      }
-      Sinks.sinkState(s, out, keys = Seq("win_start"),
+          "ts", "1 hour", "1 hour"))
+      Sinks.sinkState(s, run.out, keys = Seq("win_start"),
         orderCols = Seq("epoch")).drop("epoch")
     }),
 
@@ -539,8 +468,6 @@ object RuntimeQueries {
     // product (abandonment), and bounded state is what makes it finite.
     "c22_stream_outer_join" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val tmp = Stage.tempDir("graft-c22-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val fix = Stage.durableSplitFeed("feed-c22", dir)(Seq(
         "views" -> ev.where(col("event_type") === "view")
           .select(col("ts").as("v_ts"), col("event_id").as("v_event_id"),
@@ -555,19 +482,14 @@ object RuntimeQueries {
         StructField("v_event_id", longT), StructField("user_id", longT)))
       val cSchema = StructType(Seq(StructField("c_ts", tsT),
         StructField("c_event_id", longT), StructField("user_id", longT)))
-      withStatePartitions(s, 8) {
+      runStream(s, "graft-c22-", statePartitions, "append", FileSink)(
         Pipeline.intervalJoin(
           s.readStream.schema(vSchema).parquet(vDir), "v_ts",
           s.readStream.schema(cSchema).parquet(cDir), "c_ts",
           key = "user_id", watermark = "1 hour", within = "30 minutes",
           joinType = "left_outer")
-          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      s.read.parquet(out)
+          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts"))
+        .output
     }),
 
     // Arbitrary per-key state on Spark 4's transformWithState API
@@ -581,8 +503,6 @@ object RuntimeQueries {
     "c23_stream_tws" -> ((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
-      val tmp = Stage.tempDir("graft-c23-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val feed = Stage.durableChunkFeed("feed-c23", dir)(Seq(
         ev.select(
           concat(col("event_type"), lit("-"),
@@ -593,25 +513,11 @@ object RuntimeQueries {
       val dblT = org.apache.spark.sql.types.DoubleType
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("seq", longT), StructField("value", dblT)))
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try withStatePartitions(s, 8) {
+      runStream(s, "graft-c23-", rocksDbState, "append", FileSink)(
         graft.streaming.StatefulOps.orderedDeltaStream(
           s.readStream.schema(schema).parquet(feed)
-            .as[graft.streaming.StatefulOps.SeqValue])
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      } finally prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      s.read.parquet(out)
+            .as[graft.streaming.StatefulOps.SeqValue]))
+        .output
         .select("key", "seq", "prev", "has_prev", "value", "n_seen")
     }),
 
@@ -628,8 +534,6 @@ object RuntimeQueries {
     // oracle's gaps-and-islands form (split when diff ≥ gap).
     "c21_stream_session" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("ts", "user_id")
-      val tmp = Stage.tempDir("graft-c21-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val cut = lit("2024-01-21").cast("timestamp")
       val feed = Stage.durableChunkFeed("feed-c21", dir)(Seq(
         ev.where(col("ts") < cut),
@@ -637,7 +541,7 @@ object RuntimeQueries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("user_id", org.apache.spark.sql.types.LongType)))
-      withStatePartitions(s, 8) {
+      runStream(s, "graft-c21-", statePartitions, "append", FileSink)(
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(feed)
           .withWatermark("ts", "1 hour")
@@ -645,13 +549,8 @@ object RuntimeQueries {
           .agg(count(lit(1)).as("n"))
           .select(col("user_id"),
             col("session_window.start").as("session_start"),
-            col("session_window.end").as("session_end"), col("n"))
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      s.read.parquet(out)
+            col("session_window.end").as("session_end"), col("n")))
+        .output
     }))
 
   val oracles: Map[String, String] = Map(

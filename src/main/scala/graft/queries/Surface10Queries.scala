@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * layout machinery demonstrably changes the plan and demonstrably
   * does not change the answer.
   */
-object Surface10Queries {
+object Surface10Queries extends QueryModule {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -72,10 +72,7 @@ object Surface10Queries {
         t(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice"))
       val tmp = Stage.tempDir("graft-q86-run-").toString
-      val prevThreshold =
-        s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      graft.Graft.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = s.table(s"q86_orders_$sfKey")
           .join(s.table(s"q86_lines_$sfKey"),
             col("o_orderkey") === col("l_orderkey"))
@@ -85,8 +82,6 @@ object Surface10Queries {
         require(!plan.contains("Exchange"),
           s"bucketed join must not shuffle:\n$plan")
         joined.write.mode("overwrite").parquet(s"$tmp/result")
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       }
       s.read.parquet(s"$tmp/result")
     }),

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.{Corpus, Similarity}
 
@@ -17,7 +16,7 @@ import graft.operators.{Corpus, Similarity}
   * re-derives, every oracle-side integer SUM cast back to BIGINT
   * (DuckDB promotes to HUGEINT, which the driver hashes as float).
   */
-object Surface13Queries {
+object Surface13Queries extends QueryModule {
   import Tables._
 
   /** SemDeDup within-cluster cosine threshold. The synthetic corpus has
@@ -177,22 +176,19 @@ object Surface13Queries {
       val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"),
         col("event_type"), floor(col("value") * 1000).cast("long")
           .as("value_m"))
-      val tmp = Stage.tempDir("graft-c27-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val feed = Stage.durableChunkFeed("feed-c27", dir)(
         (0 until 4).map(k => ev.where(col("event_id") % 4 === k)))
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("event_type", StringType),
         StructField("value_m", LongType)))
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow).start().awaitTermination()
-      val nBatches = new java.io.File(s"$ckpt/offsets").listFiles()
+      val run = EventFeed.runStream(s, "graft-c27-", Nil, "append",
+          EventFeed.FileSink)(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(feed))
+      val nBatches = new java.io.File(s"${run.ckpt}/offsets").listFiles()
         .count(f => f.getName.forall(_.isDigit))
-      s.read.parquet(out)
+      run.output
         .withColumn("n_batches", lit(nBatches.toLong))
         .withColumn("paced_ok", lit(nBatches == 4))
     }),

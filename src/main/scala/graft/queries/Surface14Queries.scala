@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.Similarity
 
@@ -17,7 +16,7 @@ import graft.operators.Similarity
   * point for doubles the oracle re-derives, every oracle-side integer
   * SUM/COUNT cast back to BIGINT.
   */
-object Surface14Queries {
+object Surface14Queries extends QueryModule {
   import Tables._
 
   /** PQ geometry: 4 subspaces × 16 dims over the 64-dim embeddings,
@@ -44,16 +43,6 @@ object Surface14Queries {
       .getField("i").cast("long")
   private def pqBestCol(vec: Column, m: Int): Column =
     greatest((0 until pqK).map(j => pqSubCosCol(vec, m, j)): _*)
-
-  /** Shared micro-batch shuffle sizing for the runtime queries (32
-    * state-store dirs per stateful op is waste at test scale; a real
-    * cluster sizes this to executor count).
-    */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // NOT IN (subquery) under three-valued logic — the null-aware anti
@@ -175,29 +164,22 @@ object Surface14Queries {
     // the epoch count)
     "c29_stream_complete" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("event_id", "event_type")
-      val tmp = Stage.tempDir("graft-c29-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val feed = Stage.durableChunkFeed("feed-c29", dir)(Seq(
         ev.where(col("event_id") % 2 === 0),
         ev.where(col("event_id") % 2 =!= 0)))
       val schema = StructType(Seq(
         StructField("event_id", LongType),
         StructField("event_type", StringType)))
-      withShufflePartitions(s, 8) {
+      val run = EventFeed.runStream(s, "graft-c29-",
+          EventFeed.statePartitions, "complete",
+          EventFeed.EachBatch((batch, _, out) =>
+            batch.write.mode("overwrite").parquet(out)))(
         s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
           .parquet(feed)
-          .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-          .writeStream.outputMode("complete")
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            batch.write.mode("overwrite").parquet(out)
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow).start().awaitTermination()
-      }
-      val nBatches = new java.io.File(s"$ckpt/offsets").listFiles()
+          .groupBy(col("event_type")).agg(count(lit(1)).as("n")))
+      val nBatches = new java.io.File(s"${run.ckpt}/offsets").listFiles()
         .count(f => f.getName.forall(_.isDigit))
-      s.read.parquet(out)
+      run.output
         .withColumn("n_epochs", lit(nBatches.toLong))
         .withColumn("complete_ok", lit(nBatches == 2))
     }),
@@ -216,8 +198,6 @@ object Surface14Queries {
     // sink between the two stateful stages
     "c30_stream_chained" -> ((s, dir) => {
       val ev = Tables.events(s, dir).select("ts", "event_id")
-      val tmp = Stage.tempDir("graft-c30-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val cut = lit("2024-01-21").cast("timestamp")
       def leg(rows: DataFrame): DataFrame =
         rows.unionAll(rows.where(col("event_id") % 7 === 0))
@@ -227,21 +207,17 @@ object Surface14Queries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", LongType)))
-      withShufflePartitions(s, 8) {
+      val run = EventFeed.runStream(s, "graft-c30-",
+          EventFeed.statePartitions, "append", EventFeed.FileSink)(
         s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
           .parquet(feed)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
           .groupBy(window(col("ts"), "1 hour")).agg(count(lit(1)).as("n"))
-          .select(col("window.start").as("win_start"), col("n"))
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
-      val nStateOps = new java.io.File(s"$ckpt/state").listFiles()
+          .select(col("window.start").as("win_start"), col("n")))
+      val nStateOps = new java.io.File(s"${run.ckpt}/state").listFiles()
         .count(_.isDirectory)
-      s.read.parquet(out)
+      run.output
         .withColumn("n_state_ops", lit(nStateOps.toLong))
     }))
 

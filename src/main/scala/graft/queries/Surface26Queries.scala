@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Quantiles, Rank, TextAnalysis}
@@ -157,7 +156,7 @@ import graft.streaming.StatefulOps
   *    relevance against diversity). Three unrolled steps over ≤10-row
   *    frames, all tiny and constant at any corpus scale.
   */
-object Surface26Queries {
+object Surface26Queries extends QueryModule {
   import Tables._
 
   private def d(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -520,26 +519,14 @@ object Surface26Queries {
       val feed = Stage.durableChunkFeed("feed-c42", dir)(Seq(
         docs.where(col("doc_id") % 2 === 0).select("key", "w"),
         docs.where(col("doc_id") % 2 =!= 0).select("key", "w")))
-      val tmp = Stage.tempDir("graft-c42-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
-      mixReport(s.read.parquet(out)
+      val run = EventFeed.runStream(s, "graft-c42-", EventFeed.rocksDbState,
+          "update", EventFeed.AppendBatches)(
+        StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]))
+      mixReport(run.output
         .groupBy("key").agg(max(col("total")).as("n_tok"))
         .select(col("key").as("source"), col("n_tok")))
     }),

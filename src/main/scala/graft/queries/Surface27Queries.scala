@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.operators.TextAnalysis
@@ -111,7 +110,7 @@ import graft.streaming.StatefulOps
   *    oracle-expressible with the same double arithmetic. ONE narrow
   *    corpus pass; reports element/saturation census and MSE.
   */
-object Surface27Queries {
+object Surface27Queries extends QueryModule {
   import Tables._
 
   private def d(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -220,26 +219,14 @@ object Surface27Queries {
       val feed = Stage.durableChunkFeed("feed-c43", dir)(Seq(
         ev.where(col("event_id") % 2 === 0).select("key", "w"),
         ev.where(col("event_id") % 2 =!= 0).select("key", "w")))
-      val tmp = Stage.tempDir("graft-c43-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
-      Surface26Queries.guardrailPanel(s.read.parquet(out)
+      val run = EventFeed.runStream(s, "graft-c43-", EventFeed.rocksDbState,
+          "update", EventFeed.AppendBatches)(
+        StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]))
+      Surface26Queries.guardrailPanel(run.output
         .groupBy("key").agg(max(col("total")).as("x"))
         .select((col("key").cast("long") % 2).as("grp"), col("x")))
     }),
@@ -331,26 +318,14 @@ object Surface27Queries {
             col("b").cast("string")).as("key"), col("cell").as("w"))
       val feed = Stage.durableChunkFeed("feed-c44", dir)(Seq(
         shardCells(0), shardCells(1)))
-      val tmp = Stage.tempDir("graft-c44-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
-      val merged = s.read.parquet(out)
+      val run = EventFeed.runStream(s, "graft-c44-", EventFeed.rocksDbState,
+          "update", EventFeed.AppendBatches)(
+        StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]))
+      val merged = run.output
         .groupBy("key").agg(max(col("total")).as("cell"))
         .select(split(col("key"), "\\|").getItem(0).cast("int").as("j"),
           split(col("key"), "\\|").getItem(1).cast("long").as("b"),

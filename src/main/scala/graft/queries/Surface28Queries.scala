@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Dedup, Similarity}
@@ -51,7 +50,7 @@ import graft.streaming.StatefulOps
   *  cross-job driver-built form — so this wave adds the PlanAuditSpec
   *  gate on q92's plan instead of a third sibling query.
   */
-object Surface28Queries {
+object Surface28Queries extends QueryModule {
   import Tables._
 
   /** SemDeDup near-dup threshold: at the synthetic corpus's cosine
@@ -190,28 +189,21 @@ object Surface28Queries {
       val feed = Stage.durableChunkFeed("feed-c46", dir)(Seq(
         delta.where(col("vec_id") % 8 === 0),
         delta.where(col("vec_id") % 8 =!= 0)))
-      val tmp = Stage.tempDir("graft-c46-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("vec_id", LongType),
         StructField("embedding", org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType))))
       val cents = Similarity.syntheticCentroids(SimilarityQueries.ivfN, 64)
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Dedup.semDedupDelta(batch, corpus, "vec_id", "embedding",
-              cents, semThreshold,
-              selfDot = v => vd(v, v),
-              pairCosine = (a, b, na, nb) =>
-                vd(a, b) / (sqrt(na) * sqrt(nb)))
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update").trigger(Trigger.AvailableNow).start()
-        .awaitTermination()
-      s.read.parquet(out).distinct()
+      EventFeed.runStream(s, "graft-c46-", Nil, "update",
+          EventFeed.EachBatch((batch, _, out) =>
+            Dedup.semDedupDelta(batch, corpus, "vec_id", "embedding",
+                cents, semThreshold,
+                selfDot = v => vd(v, v),
+                pairCosine = (a, b, na, nb) =>
+                  vd(a, b) / (sqrt(na) * sqrt(nb)))
+              .write.mode("append").parquet(out)))(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(feed))
+        .output.distinct()
     }),
 
     "c45_stream_cuped" -> ((s, dir) => {
@@ -237,26 +229,14 @@ object Surface28Queries {
       val feed = Stage.durableChunkFeed("feed-c45", dir)(Seq(
         keyed.where(col("event_id") % 2 === 0).select("key", "w"),
         keyed.where(col("event_id") % 2 =!= 0).select("key", "w")))
-      val tmp = Stage.tempDir("graft-c45-").toString
-      val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
-      val perUser = s.read.parquet(out)
+      val run = EventFeed.runStream(s, "graft-c45-", EventFeed.rocksDbState,
+          "update", EventFeed.AppendBatches)(
+        StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]))
+      val perUser = run.output
         .groupBy("key").agg(max(col("total")).as("t"))
         .select(split(col("key"), "\\|").getItem(0).cast("long")
           .as("user_id"),

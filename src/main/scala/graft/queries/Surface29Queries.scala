@@ -81,7 +81,7 @@ import graft.operators.{Dedup, Similarity, VectorIndex}
   *    and reads exactly nprobe FILES. Same e33 oracle: maintenance
   *    changes file count and read cost, never what a probe returns.
   */
-object Surface29Queries {
+object Surface29Queries extends QueryModule {
   import Tables._
 
   /** e179's near-dup threshold — e174's value (the corpus cosine
@@ -230,7 +230,6 @@ object Surface29Queries {
         deltaEdges.where(col("id_a") % 2 === 0),
         deltaEdges.where(col("id_a") % 2 =!= 0)))
       val tmp = Stage.tempDir("graft-c47-").toString
-      val ckpt = s"$tmp/ckpt"
       // seed the per-run v0 from the staged label fixture by FILE COPY
       // — the same parquet bytes; r19 re-encoded them through a Spark
       // write (a full read+write job) on every invocation
@@ -249,26 +248,22 @@ object Surface29Queries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("id_b",
           org.apache.spark.sql.types.LongType)))
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // version paths derive from the BATCH ID, never a mutable
-          // pointer: a retried batch k re-reads v{k} and overwrites
-          // v{k+1} — the read path is never the write path, so
-          // at-least-once redelivery recomputes the identical table
-          // (idempotent operationally, on top of the algebraic no-op
-          // for edges already absorbed into v{k})
-          val next = Dedup.connectedComponentsDelta(
-            s.read.parquet(s"$tmp/labels-v$id"), batch, "id_a", "id_b")
-          next.write.mode("overwrite").parquet(s"$tmp/labels-v${id + 1}")
-          last = math.max(last, id + 1)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-        .start().awaitTermination()
+      EventFeed.runStream(s, "graft-c47-", Nil, "update",
+          EventFeed.EachBatch { (batch, id, _) =>
+            // version paths derive from the BATCH ID, never a mutable
+            // pointer: a retried batch k re-reads v{k} and overwrites
+            // v{k+1} — the read path is never the write path, so
+            // at-least-once redelivery recomputes the identical table
+            // (idempotent operationally, on top of the algebraic no-op
+            // for edges already absorbed into v{k})
+            val next = Dedup.connectedComponentsDelta(
+              s.read.parquet(s"$tmp/labels-v$id"), batch, "id_a", "id_b")
+            next.write.mode("overwrite")
+              .parquet(s"$tmp/labels-v${id + 1}")
+            last = math.max(last, id + 1)
+          })(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(feed))
       s.read.parquet(s"$tmp/labels-v$last")
         .select(col("id").as("doc_id"), col("component"))
     }),
@@ -292,7 +287,7 @@ object Surface29Queries {
       val cents = Similarity.syntheticCentroids(SimilarityQueries.ivfN, 64)
       val all = t(s, dir, "embeddings")
       val tmp = Stage.tempDir("graft-c48-").toString
-      val layout = s"$tmp/index"; val ckpt = s"$tmp/ckpt"
+      val layout = s"$tmp/index"
       VectorIndex.build(all.where(col("vec_id") % 4 =!= 0),
         "embedding", cents, layout)
       val delta = all.where(col("vec_id") % 4 === 0)
@@ -306,17 +301,11 @@ object Surface29Queries {
         org.apache.spark.sql.types.StructField("embedding",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType))))
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          VectorIndex.append(batch, "embedding", cents, layout)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-        .start().awaitTermination()
+      EventFeed.runStream(s, "graft-c48-", Nil, "update",
+          EventFeed.EachBatch((batch, _, _) =>
+            VectorIndex.append(batch, "embedding", cents, layout)))(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(feed))
       val (q, qCells) = probeCells(s, dir, cents, 2)
       val probed = VectorIndex.probe(s, layout, q, qCells, 10,
         "vec_id", "embedding", dedupKey = true,
@@ -407,8 +396,6 @@ object Surface29Queries {
       val ev = events(s, dir).select(col("event_type"),
         floor(col("value") * 1000).cast("long").as("vm"),
         col("event_id"))
-      val tmp = Stage.tempDir("graft-c49-").toString
-      val ckpt = s"$tmp/ckpt"
       val feed = Stage.durableChunkFeed("feed-c49", dir)(Seq(
         ev.where(col("event_id") % 2 === 0),
         ev.where(col("event_id") % 2 =!= 0)))
@@ -419,18 +406,13 @@ object Surface29Queries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("event_id",
           org.apache.spark.sql.types.LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
+      val run = EventFeed.runStream(s, "graft-c49-",
+          EventFeed.statePartitions, "update", EventFeed.NoSink)(
         s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
           .parquet(feed)
           .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"), sum(col("vm")).as("value_m"))
-          .writeStream.format("noop")
-          .option("checkpointLocation", ckpt)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      }
-      s.read.format("statestore").load(ckpt)
+          .agg(count(lit(1)).as("cnt"), sum(col("vm")).as("value_m")))
+      s.read.format("statestore").load(run.ckpt)
         .select(col("key.event_type").as("event_type"),
           col("value.count").as("cnt"),
           col("value.sum").as("value_m"))
@@ -451,8 +433,6 @@ object Surface29Queries {
     "c50_tws_state_audit" -> ((s, dir) => {
       import s.implicits._
       val ev = Tables.events(s, dir)
-      val tmp = Stage.tempDir("graft-c50-").toString
-      val ckpt = s"$tmp/ckpt"
       // the c23 feed verbatim (shared durable stage): key on
       // event_type × user-bucket, seq = event_id
       val feed = Stage.durableChunkFeed("feed-c23", dir)(Seq(
@@ -468,27 +448,13 @@ object Surface29Queries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = s.conf.getOption(key)
-      // transformWithState REQUIRES RocksDB (multiple column
-      // families) — set unconditionally, restore after
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try RuntimeQueries.withStatePartitions(s, 8) {
+      val run = EventFeed.runStream(s, "graft-c50-", EventFeed.rocksDbState,
+          "append", EventFeed.NoSink)(
         graft.streaming.StatefulOps.orderedDeltaStream(
           s.readStream.schema(schema).parquet(feed)
-            .as[graft.streaming.StatefulOps.SeqValue])
-          .writeStream.format("noop")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      } finally prevProvider match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
-      }
+            .as[graft.streaming.StatefulOps.SeqValue]))
       s.read.format("statestore").option("stateVarName", "last")
-        .load(ckpt)
+        .load(run.ckpt)
         .select(col("key.value").as("key"),
           col("value._1").as("last_value"),
           col("value._2").as("n_seen"))

@@ -15,7 +15,7 @@ import graft.transforms.Transforms
   * through Spark's shortest-repr string cast, which is exact, so oracle
   * values are the original column values.
   */
-object TransformQueries {
+object TransformQueries extends QueryModule {
   import Tables._
 
   private val priceSchema = StructType(Seq(

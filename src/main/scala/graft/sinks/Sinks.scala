@@ -75,22 +75,15 @@ object Sinks {
     * files untouched — the bounded-range recompute (late data, logic
     * fix) every day-partitioned 100 TB table needs. Static overwrite
     * would DROP all other partitions; a full rewrite would cost the
-    * corpus. Sets the session conf for the duration of the write and
-    * restores it. Judged by `e182_backfill_overwrite`.
+    * corpus. Sets the session conf for the duration of the write only.
+    * Judged by `e182_backfill_overwrite`.
     */
   def overwritePartitions(df: DataFrame, path: String,
-                          partitionCols: Seq[String]): Unit = {
-    val s = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try df.write.mode("overwrite")
-      .partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+                          partitionCols: Seq[String]): Unit =
+    graft.Graft.withConf(df.sparkSession,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
     }
-  }
 
   /** K1, live form: JDBC append with the reference sink's knobs mapped —
     * `batchsize` = the 32-record micro-batches, `numPartitions` bounds

@@ -559,7 +559,7 @@ object DedupQueries extends QueryModule {
   /** tokens → distinct word shingles — the frame every minhash-family
     * query derives from, and the first durable checkpoint of the dedup
     * stage chain (shingles → hashes → signatures → pairs → components,
-    * each `_SUCCESS`-gated under target/graft-fixtures): a corpus
+    * each a Stage.durableFrame under target/graft-fixtures): a corpus
     * pipeline tokenizes a snapshot exactly once, and every re-entrant
     * audit below reads the checkpoint instead of re-tokenizing.
     */

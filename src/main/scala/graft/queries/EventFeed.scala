@@ -50,7 +50,7 @@ object EventFeed {
     */
   case class Built(feed: String, loUs: Long, hiUs: Long, windowUs: Long)
 
-  /** Write the chunked feed (+ sentinels) with pinned mtimes.
+  /** Stage the chunked feed (+ sentinels) with pinned mtimes.
     *
     * @param perCampaign entity = (user, props.k) when true, else
     *                    (user) with k pinned to 0
@@ -58,87 +58,46 @@ object EventFeed {
     * @param sentinelGaps for each gap g, one sentinel file at
     *                    ts = hi + g·window (empty = no eviction audit)
     */
-  def build(s: SparkSession, dir: String, tmpPrefix: String,
+  def build(s: SparkSession, dir: String,
       perCampaign: Boolean, windowOf: (Long, Long) => Long,
       sentinelGaps: Seq[Long]): Built = {
-    // The feed is DURABLY staged per (query prefix × sf × testdata
-    // fingerprint): building it costs a ts-bounds pass plus one
-    // filtered single-file write per chunk over the events table (the
-    // dominant cost of the whole query at scale — 46.5 s of c33's
-    // 68 s at ×100 was feed construction), while the feed itself is a
-    // pure function of the source table and the query's static
-    // parameters. Pinned mtimes are part of the staged content (the
-    // publish rename preserves them), so arrival order is identical
-    // on every reuse. Checkpoints/output stay per-run in [[Stage
-    // .tempDir]] — only the input files are shared.
-    // the fixture key folds in a digest of the STATIC parameters the
-    // staged bytes depend on (perCampaign changes the data, windowOf
-    // and sentinelGaps the sentinel rows) — editing a caller's
-    // parameters can never silently serve the stale feed. windowOf is
-    // a function, so it is characterized by probing it at FOUR spans:
-    // two small fixed ones, one at the realistic multi-day scale an
-    // actual events feed spans, and one with a NONZERO lo (a formula
-    // that reads lo is invisible to lo=0 probes). A non-affine edit
-    // would have to agree at all four probe points to slip through,
-    // and the digest is a truncated MD5, not a 32-bit String.hashCode,
-    // so accidental collisions between candidate formulas are out.
-    val probeStr = s"n$dataChunks|$perCampaign|${sentinelGaps.mkString(",")}|" +
-      Seq((0L, 3000000L), (0L, 86400000000L),
-        (0L, 30L * 86400000000L),
-        (1700000000000000L, 1700000000000000L + 7L * 86400000000L))
-        .map { case (lo, hi) => windowOf(lo, hi) }.mkString("|")
-    val pdig = java.security.MessageDigest.getInstance("MD5")
-      .digest(probeStr.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    val fix = Stage.durableDir(
-        s"feed-${tmpPrefix.stripSuffix("-")}-p$pdig",
-        dir, "_FEED_OK") { stage =>
-      val kCol =
-        if (perCampaign) get_json_object(col("props"), "$.k").cast("long")
-        else lit(0L)
-      val ev = Tables.events(s, dir).select(col("user_id"),
-        kCol.as("k"), col("event_id"), col("ts"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"),
-        col("value"))
-      val feed = stage.resolve("feed").toString
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).head()
-      val (lo0, hi0) = (bounds.getLong(0), bounds.getLong(1))
-      val w = windowOf(lo0, hi0)
-      val step = (hi0 - lo0) / dataChunks + 1
-      val feedDir = new java.io.File(feed)
-      val stamped = scala.collection.mutable.Set[String]()
-      var fileIdx = 0
-      def pinNew(): Unit = feedDir.listFiles().foreach { f =>
-        val n = f.getName
-        if (!n.startsWith("_") && !n.startsWith(".") &&
-            !stamped.contains(n)) {
-          require(f.setLastModified(1700000000000L + fileIdx * 600000L),
-            s"mtime pin failed for $f — arrival order would race")
-          stamped += n
-        }
-      }
-      var lo = Long.MinValue
-      (Seq.tabulate(dataChunks - 1)(i => lo0 + (i + 1) * step)
-        :+ Long.MaxValue).foreach { hi =>
+    // The feed is DURABLY staged (Stage.durableChunkFeed): building it
+    // costs a filtered single-file write per chunk over the events
+    // table (the dominant cost of the whole query at scale — 46.5 s of
+    // c33's 68 s at ×100 was feed construction), while the feed itself
+    // is a pure function of the source table and the query's static
+    // parameters. The ts bounds are durable scalars, so a reuse runs
+    // no Spark job; the sentinel rows carry their timestamps as
+    // literals, so the chunk-plan digest covers perCampaign,
+    // dataChunks, sentinelGaps and windowOf exactly — callers with the
+    // same parameters share one feed. Checkpoints/output
+    // stay per-run in [[Stage.tempDir]] — only the input files are
+    // shared.
+    val tsUs = Tables.events(s, dir).select(unix_micros(col("ts")).as("ts_us"))
+    val lo0 = Stage.durableScalar("events-ts-lo", dir)(tsUs.agg(min("ts_us")))
+    val hi0 = Stage.durableScalar("events-ts-hi", dir)(tsUs.agg(max("ts_us")))
+    val w = windowOf(lo0, hi0)
+    val kCol =
+      if (perCampaign) get_json_object(col("props"), "$.k").cast("long")
+      else lit(0L)
+    val ev = Tables.events(s, dir).select(col("user_id"),
+      kCol.as("k"), col("event_id"), col("ts"),
+      unix_micros(col("ts")).as("ts_us"), col("event_type"),
+      col("value"))
+    val step = (hi0 - lo0) / dataChunks + 1
+    val cuts = Long.MinValue +:
+      Seq.tabulate(dataChunks - 1)(i => lo0 + (i + 1) * step) :+ Long.MaxValue
+    val feed = Stage.durableChunkFeed("feed-events", dir)(
+      cuts.zip(cuts.tail).map { case (lo, hi) =>
         ev.where(col("ts_us") > lo && col("ts_us") <= hi)
-          .coalesce(1).write.mode("append").parquet(feed)
-        pinNew(); fileIdx += 1; lo = hi
-      }
-      sentinelGaps.foreach { g =>
+      } ++ sentinelGaps.map { g =>
         val ts = hi0 + g * w
         s.range(1).select(lit(-1L).as("user_id"), lit(0L).as("k"),
-            lit(-1L).as("event_id"), timestamp_micros(lit(ts)).as("ts"),
-            lit(ts).as("ts_us"), lit("noop").as("event_type"),
-            lit(0.0).as("value"))
-          .coalesce(1).write.mode("append").parquet(feed)
-        pinNew(); fileIdx += 1
-      }
-      java.nio.file.Files.write(stage.resolve("_FEED_OK"),
-        s"$lo0 $hi0".getBytes("UTF-8"))
-    }
-    val Array(lo0, hi0) = new String(java.nio.file.Files.readAllBytes(
-      fix.resolve("_FEED_OK")), "UTF-8").split(" ").map(_.toLong)
-    Built(fix.resolve("feed").toString, lo0, hi0, windowOf(lo0, hi0))
+          lit(-1L).as("event_id"), timestamp_micros(lit(ts)).as("ts"),
+          lit(ts).as("ts_us"), lit("noop").as("event_type"),
+          lit(0.0).as("value"))
+      })
+    Built(feed, lo0, hi0, w)
   }
 
   /** The built feed as a stream: one file per micro-batch, event
@@ -222,7 +181,7 @@ object EventFeed {
       tmpPrefix: String, perCampaign: Boolean,
       windowOf: (Long, Long) => Long,
       sentinelGaps: Seq[Long]): DataFrame = {
-    val b = build(s, dir, tmpPrefix, perCampaign, windowOf, sentinelGaps)
+    val b = build(s, dir, perCampaign, windowOf, sentinelGaps)
     runStream(s, tmpPrefix, statePartitions, "append", AppendBatches)(
       Attribution.attributeWindowed(stream(s, b), b.windowUs,
         drainAfterMs = b.hiUs / 1000L)).output
@@ -237,7 +196,7 @@ object EventFeed {
     */
   def multiTouchRollup(s: SparkSession, dir: String,
       tmpPrefix: String): DataFrame = {
-    val b = build(s, dir, tmpPrefix, perCampaign = false,
+    val b = build(s, dir, perCampaign = false,
       windowOf = (_, _) => 0L, sentinelGaps = Seq.empty)
     runStream(s, tmpPrefix, statePartitions, "append", AppendBatches)(
       Attribution.multiTouch(stream(s, b))).output

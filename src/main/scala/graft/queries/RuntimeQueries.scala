@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -30,6 +30,56 @@ object RuntimeQueries extends QueryModule {
   private val feedSchema = StructType(Seq(
     StructField("value", StringType),
     StructField("topic", StringType)))
+
+  /** Views ⋈ clicks of the same user within 30 minutes after the view,
+    * both sides watermarked 1 h, through [[Pipeline.intervalJoin]] as
+    * a `joinType` join (c11 inner, c22 left outer), drained from one
+    * staged two-sided feed.
+    */
+  private def viewClickJoin(s: SparkSession, dir: String,
+      tmpPrefix: String, joinType: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    val fix = Stage.durableSplitFeed("feed-views-clicks", dir)(Seq(
+      "views" -> ev.where(col("event_type") === "view")
+        .select(col("ts").as("v_ts"), col("event_id").as("v_event_id"),
+          col("user_id")),
+      "clicks" -> ev.where(col("event_type") === "click")
+        .select(col("ts").as("c_ts"), col("event_id").as("c_event_id"),
+          col("user_id"))))
+    val tsT = org.apache.spark.sql.types.TimestampType
+    val longT = org.apache.spark.sql.types.LongType
+    val vSchema = StructType(Seq(StructField("v_ts", tsT),
+      StructField("v_event_id", longT), StructField("user_id", longT)))
+    val cSchema = StructType(Seq(StructField("c_ts", tsT),
+      StructField("c_event_id", longT), StructField("user_id", longT)))
+    runStream(s, tmpPrefix, statePartitions, "append", FileSink)(
+      Pipeline.intervalJoin(
+        s.readStream.schema(vSchema).parquet(s"$fix/views"), "v_ts",
+        s.readStream.schema(cSchema).parquet(s"$fix/clicks"), "c_ts",
+        key = "user_id", watermark = "1 hour", within = "30 minutes",
+        joinType = joinType)
+        .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts"))
+      .output
+  }
+
+  /** c23's keyed delta feed as a stream — key = event_type × user
+    * bucket, seq = event_id — staged once and shared with c50.
+    */
+  private[queries] def seqValueStream(s: SparkSession,
+      dir: String): Dataset[graft.streaming.StatefulOps.SeqValue] = {
+    import s.implicits._
+    val feed = Stage.durableChunkFeed("feed-c23", dir)(Seq(
+      Tables.events(s, dir).select(
+        concat(col("event_type"), lit("-"),
+          (col("user_id") % 64).cast("string")).as("key"),
+        col("event_id").as("seq"),
+        col("value"))))
+    val schema = StructType(Seq(StructField("key", StringType),
+      StructField("seq", org.apache.spark.sql.types.LongType),
+      StructField("value", org.apache.spark.sql.types.DoubleType)))
+    s.readStream.schema(schema).parquet(feed)
+      .as[graft.streaming.StatefulOps.SeqValue]
+  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S2+C5+C6+C7 end to end: snapshot envelopes land in the feed, one
@@ -294,30 +344,8 @@ object RuntimeQueries extends QueryModule {
     // AvailableNow; inner interval joins emit exactly the matched
     // pairs, so the judged frame equals the batch join definition —
     // state eviction changes WHEN rows leave memory, never the result
-    "c11_stream_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val fix = Stage.durableSplitFeed("feed-c11", dir)(Seq(
-        "views" -> ev.where(col("event_type") === "view")
-          .select(col("ts").as("v_ts"), col("event_id").as("v_event_id"),
-            col("user_id")),
-        "clicks" -> ev.where(col("event_type") === "click")
-          .select(col("ts").as("c_ts"), col("event_id").as("c_event_id"),
-            col("user_id"))))
-      val vDir = s"$fix/views"; val cDir = s"$fix/clicks"
-      val tsT = org.apache.spark.sql.types.TimestampType
-      val longT = org.apache.spark.sql.types.LongType
-      val vSchema = StructType(Seq(StructField("v_ts", tsT),
-        StructField("v_event_id", longT), StructField("user_id", longT)))
-      val cSchema = StructType(Seq(StructField("c_ts", tsT),
-        StructField("c_event_id", longT), StructField("user_id", longT)))
-      runStream(s, "graft-c11-", statePartitions, "append", FileSink)(
-        Pipeline.intervalJoin(
-          s.readStream.schema(vSchema).parquet(vDir), "v_ts",
-          s.readStream.schema(cSchema).parquet(cDir), "c_ts",
-          key = "user_id", watermark = "1 hour", within = "30 minutes")
-          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts"))
-        .output
-    }),
+    "c11_stream_join" -> ((s, dir) =>
+      viewClickJoin(s, dir, "graft-c11-", "inner")),
 
     // Stream-STATIC enrichment through the RUNTIME: the event stream
     // joins the customer dimension inside the micro-batch engine. The
@@ -466,31 +494,8 @@ object RuntimeQueries extends QueryModule {
     // end-of-feed are provably withheld. This is the "views that never
     // converted" feed — at 100 TB/day the outer emission IS the
     // product (abandonment), and bounded state is what makes it finite.
-    "c22_stream_outer_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val fix = Stage.durableSplitFeed("feed-c22", dir)(Seq(
-        "views" -> ev.where(col("event_type") === "view")
-          .select(col("ts").as("v_ts"), col("event_id").as("v_event_id"),
-            col("user_id")),
-        "clicks" -> ev.where(col("event_type") === "click")
-          .select(col("ts").as("c_ts"), col("event_id").as("c_event_id"),
-            col("user_id"))))
-      val vDir = s"$fix/views"; val cDir = s"$fix/clicks"
-      val tsT = org.apache.spark.sql.types.TimestampType
-      val longT = org.apache.spark.sql.types.LongType
-      val vSchema = StructType(Seq(StructField("v_ts", tsT),
-        StructField("v_event_id", longT), StructField("user_id", longT)))
-      val cSchema = StructType(Seq(StructField("c_ts", tsT),
-        StructField("c_event_id", longT), StructField("user_id", longT)))
-      runStream(s, "graft-c22-", statePartitions, "append", FileSink)(
-        Pipeline.intervalJoin(
-          s.readStream.schema(vSchema).parquet(vDir), "v_ts",
-          s.readStream.schema(cSchema).parquet(cDir), "c_ts",
-          key = "user_id", watermark = "1 hour", within = "30 minutes",
-          joinType = "left_outer")
-          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts"))
-        .output
-    }),
+    "c22_stream_outer_join" -> ((s, dir) =>
+      viewClickJoin(s, dir, "graft-c22-", "left_outer")),
 
     // Arbitrary per-key state on Spark 4's transformWithState API
     // through the RUNTIME — the successor of flatMapGroupsWithState
@@ -500,26 +505,11 @@ object RuntimeQueries extends QueryModule {
     // (prev → value) transition with a running update count, applied in
     // event-sequence order so a batch lag()/row_number() oracle can
     // replay the exact transition chain the stateful operator produced.
-    "c23_stream_tws" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-      val feed = Stage.durableChunkFeed("feed-c23", dir)(Seq(
-        ev.select(
-          concat(col("event_type"), lit("-"),
-            (col("user_id") % 64).cast("string")).as("key"),
-          col("event_id").as("seq"),
-          col("value"))))
-      val longT = org.apache.spark.sql.types.LongType
-      val dblT = org.apache.spark.sql.types.DoubleType
-      val schema = StructType(Seq(StructField("key", StringType),
-        StructField("seq", longT), StructField("value", dblT)))
+    "c23_stream_tws" -> ((s, dir) =>
       runStream(s, "graft-c23-", rocksDbState, "append", FileSink)(
-        graft.streaming.StatefulOps.orderedDeltaStream(
-          s.readStream.schema(schema).parquet(feed)
-            .as[graft.streaming.StatefulOps.SeqValue]))
+        graft.streaming.StatefulOps.orderedDeltaStream(seqValueStream(s, dir)))
         .output
-        .select("key", "seq", "prev", "has_prev", "value", "n_seen")
-    }),
+        .select("key", "seq", "prev", "has_prev", "value", "n_seen")),
 
     // SESSION windows through the RUNTIME: `session_window` + watermark
     // driven by the real micro-batch engine — the MERGING-window state

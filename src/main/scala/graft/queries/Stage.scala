@@ -68,32 +68,34 @@ object Stage {
     d
   }
 
-  /** Durable per-sf FIXTURE root under the build's target dir — for
-    * staged table layouts (bucketed tables, partitioned copies) that
-    * model "pay the write once when the tables land". Unlike
+  /** Durable per-sf FIXTURE path under the build's target dir. Unlike
     * [[tempDir]] these survive JVM exit on purpose: /tmp is swept
     * between harness sessions, and a fixture rebuilt per JVM would
-    * charge every benched run for a one-time layout cost. Callers gate
-    * reuse on the writer's own `_SUCCESS` marker.
+    * charge every benched run for a one-time layout cost. Private:
+    * every cross-JVM stage goes through [[durableDir]]'s atomic
+    * publish, never a hand-rolled gate on this path.
     *
     * The path bakes in a FINGERPRINT of the source dir's parquet
     * listing (name, size, mtime): if the testdata is ever regenerated,
     * every fixture key changes and the stale staged data can never be
-    * served — the `_SUCCESS` gate is then also a freshness gate.
+    * served — the marker gate is then also a freshness gate.
     */
-  def fixtureDir(name: String, dir: String): String = {
+  private def fixtureDir(name: String, dir: String): java.nio.file.Path = {
     val sfKey = dir.replaceAll("[^A-Za-z0-9]", "_")
     val p = java.nio.file.Paths.get("target", "graft-fixtures",
       s"$name-$sfKey-${fingerprints.computeIfAbsent(dir, dirFingerprint)}")
       .toAbsolutePath
     java.nio.file.Files.createDirectories(p.getParent)
-    p.toString
+    p
   }
 
   private val fingerprints =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def dirFingerprint(dir: String): String = try {
+  // An unreadable source dir throws: a constant fallback fingerprint
+  // would silently turn off the freshness gate for every fixture of
+  // that dir.
+  private def dirFingerprint(dir: String): String = {
     import scala.jdk.CollectionConverters._
     val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
     val entries =
@@ -105,25 +107,36 @@ object Stage {
           s"${p.getFileName}:$sz:$mt"
         }.toSeq.sorted.mkString("|")
       finally listing.close()
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-  } catch { case _: Throwable => "nofp" }
+    digest(entries)
+  }
 
-  /** Durable `_SUCCESS`-gated staged FRAME under [[fixtureDir]]: the
-    * first caller per (name, sf, testdata fingerprint) — across JVMs,
-    * not just within one — builds and writes the parquet; every later
-    * caller pays a narrow scan. This is the persistence tier for
-    * derived stages a real corpus pipeline checkpoints between jobs
-    * (shingle frames, MinHash signatures, LSH candidate pairs,
+  /** Short hex digest of `text`, the form of every hashed fixture key
+    * part: the testdata listing, a plan's text, or a parameter set the
+    * staged bytes depend on that no plan carries (e178's centroids).
+    */
+  private[queries] def digest(text: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(text.getBytes("UTF-8"))
+      .take(4).map("%02x".format(_)).mkString
+
+  /** The file whose presence marks a published fixture. */
+  private val Marker = "_SUCCESS"
+
+  /** Durable staged FRAME (a [[durableDir]] holding one parquet
+    * frame): the first caller per (name, sf, testdata fingerprint) —
+    * across JVMs, not just within one — builds and writes the parquet;
+    * every later caller pays a narrow scan. This is the persistence
+    * tier for derived stages a real corpus pipeline checkpoints between
+    * jobs (shingle frames, MinHash signatures, LSH candidate pairs,
     * component labels, rank-span CDFs): at 100 TB these are computed
     * once per corpus snapshot and every downstream job reads the
     * checkpoint. [[frame]] remains the per-JVM tier for run-scoped
-    * intermediates.
+    * intermediates. The key leaves the derivation out (see SCALE.md,
+    * "The fixture rule").
     */
   def durableFrame(s: SparkSession, name: String, dir: String)
                   (build: => DataFrame): DataFrame = {
-    val path = durableDir(name, dir, "_SUCCESS") { tmp =>
+    val path = durableDir(name, dir) { tmp =>
       build.write.mode("overwrite").parquet(tmp.toString)
     }
     s.read.parquet(path.toString)
@@ -143,8 +156,8 @@ object Stage {
     */
   def durableScalar(name: String, dir: String)
                    (scalar: DataFrame): Long = {
-    val p = durableDir(s"$name-p${planDigest(Seq(scalar))}", dir,
-      "_SCALAR") { stage =>
+    val p = durableDir(s"$name-p${planDigest(Seq(scalar))}", dir) {
+      stage =>
         // Spark writers create their staging dir themselves; a bare
         // file write doesn't — make it first.
         java.nio.file.Files.createDirectories(stage)
@@ -164,19 +177,19 @@ object Stage {
       "UTF-8").trim.toLong
   }
 
-  /** Durable `_SUCCESS`-gated staged DIRECTORY under [[fixtureDir]] —
-    * the general form [[durableFrame]] rides on, for fixtures that are
-    * not a single parquet frame (chunked streaming feeds with pinned
-    * mtimes, media files): `build` populates a writer-unique staging
-    * dir — file mtimes set inside it survive the publish rename — and
-    * the atomic-rename protocol below makes exactly one writer win.
-    * `marker` is the file whose presence gates reuse; builders whose
-    * last step is NOT a Spark parquet write must create it themselves.
+  /** Durable staged DIRECTORY — the one way a stage crosses JVMs; the
+    * other `durable*` forms ride on it. `build` populates a
+    * writer-unique staging dir (file mtimes set inside it survive the
+    * publish rename); this then writes the `_SUCCESS` marker into it
+    * and publishes it by atomic rename, so exactly one writer wins and
+    * no reader ever sees a half-written fixture. Callers fold every
+    * parameter the staged bytes depend on into `name` ([[planDigest]]
+    * for derivations, [[digest]] for driver-side values).
     */
-  def durableDir(name: String, dir: String, marker: String)
+  def durableDir(name: String, dir: String)
                 (build: java.nio.file.Path => Unit): java.nio.file.Path = {
-    val path = java.nio.file.Paths.get(fixtureDir(name, dir))
-    if (!java.nio.file.Files.exists(path.resolve(marker))) {
+    val path = fixtureDir(name, dir)
+    if (!java.nio.file.Files.exists(path.resolve(Marker))) {
       // Build into a writer-unique staging dir and atomically rename
       // into place: two JVMs that both see a missing marker (e.g.
       // Verify and Bench started together) each write their own temp
@@ -188,8 +201,8 @@ object Stage {
       val tmp = path.resolveSibling(
         s"${path.getFileName}.tmp-${java.lang.ProcessHandle.current().pid()}-${System.nanoTime()}")
       build(tmp)
-      require(java.nio.file.Files.exists(tmp.resolve(marker)),
-        s"durableDir($name): build completed without creating $marker")
+      java.nio.file.Files.createDirectories(tmp)
+      java.nio.file.Files.write(tmp.resolve(Marker), Array.emptyByteArray)
       // a stale un-markered dir (killed writer of the pre-atomic
       // era) blocks the rename without ever becoming valid — clear it.
       // NOT an in-place recursive delete: between the marker check
@@ -200,48 +213,55 @@ object Stage {
       // re-check the moved dir: if it turns out to be a published
       // fixture we raced with, put it back (or drop it if the winner
       // has already re-published an equivalent copy — builds are
-      // deterministic); only a genuinely stale dir gets deleted.
+      // deterministic); only a genuinely stale dir gets deleted. A
+      // failed move means another writer moved or published first.
       if (java.nio.file.Files.exists(path) &&
-          !java.nio.file.Files.exists(path.resolve(marker))) {
+          !java.nio.file.Files.exists(path.resolve(Marker))) {
         val trash = path.resolveSibling(
           s"${path.getFileName}.trash-${java.lang.ProcessHandle.current().pid()}-${System.nanoTime()}")
         try {
           java.nio.file.Files.move(path, trash,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          if (java.nio.file.Files.exists(trash.resolve(marker))) {
+          if (java.nio.file.Files.exists(trash.resolve(Marker))) {
             try java.nio.file.Files.move(trash, path,
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: Throwable => deleteRecursively(trash) }
+            catch {
+              case _: java.nio.file.FileSystemException =>
+                deleteRecursively(trash)
+            }
           } else deleteRecursively(trash)
-        } catch { case _: Throwable => () }
+        } catch { case _: java.nio.file.FileSystemException => () }
       }
       try java.nio.file.Files.move(tmp, path,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
         case _: java.nio.file.FileSystemException
-          if java.nio.file.Files.exists(path.resolve(marker)) =>
+          if java.nio.file.Files.exists(path.resolve(Marker)) =>
           deleteRecursively(tmp)
       }
     }
     path
   }
 
-  /** Digest of the ANALYZED plans behind a set of frames, folded into
-    * a fixture key: the testdata fingerprint invalidates a fixture
-    * when the SOURCE changes, this invalidates it when the QUERY's
-    * own derivation changes (a cut timestamp, a chunk count, a
-    * projection) — without it, editing a feed's parameters would
-    * silently keep serving the stale staged content. `semanticHash`
-    * runs on the canonicalized plan (normalized expression ids), so
-    * the digest is stable across JVMs for the same derivation and
-    * costs only plan analysis (milliseconds), never execution.
+  /** Digest of the derivation behind a set of frames, folded into a
+    * fixture key: the testdata fingerprint invalidates a fixture when
+    * the SOURCE changes, this invalidates it when the QUERY's own
+    * derivation changes (a cut timestamp, a chunk count, a projection)
+    * — without it, editing a feed's parameters would silently keep
+    * serving the stale staged content. It digests TEXT: the
+    * canonicalized analyzed plan (normalized expression ids, every
+    * field printed), the output schema (canonicalization erases column
+    * names) and the sorted input files. `semanticHash` is no key: it
+    * folds in `ParquetFileFormat.hashCode`, an identity hash, so every
+    * JVM got new keys and rebuilt every feed. Costs plan analysis and a
+    * file listing (milliseconds), never execution.
     */
-  private def planDigest(frames: Seq[DataFrame]): String = {
-    val h = frames.foldLeft(17) { (acc, df) =>
-      acc * 31 + df.queryExecution.analyzed.semanticHash()
-    }
-    (h & 0x7fffffff).toHexString
-  }
+  private def planDigest(frames: Seq[DataFrame]): String =
+    digest(frames.map { df =>
+      val plan = df.queryExecution.analyzed.canonicalized
+        .treeString(verbose = true, addSuffix = false, maxFields = Int.MaxValue)
+      s"$plan\n${df.schema.toDDL}\n${df.inputFiles.sorted.mkString("\n")}"
+    }.mkString("\n--\n"))
 
   /** Durable pre-written STREAM-FEED fixture: the chunk DataFrames are
     * written once per (name × sf × testdata fingerprint × chunk-plan
@@ -261,7 +281,7 @@ object Stage {
   def durableChunkFeed(name: String, dir: String)
                       (chunks: => Seq[DataFrame]): String = {
     val cs = chunks
-    durableDir(s"$name-p${planDigest(cs)}", dir, "_FEED_OK") { stage =>
+    durableDir(s"$name-p${planDigest(cs)}", dir) { stage =>
       val feed = stage.resolve("feed")
       val fdir = feed.toFile
       val stamped = scala.collection.mutable.Set[String]()
@@ -279,8 +299,6 @@ object Stage {
         }
         idx += 1
       }
-      java.nio.file.Files.write(stage.resolve("_FEED_OK"),
-        Array.emptyByteArray)
     }.resolve("feed").toString
   }
 
@@ -294,13 +312,10 @@ object Stage {
   def durableSplitFeed(name: String, dir: String)
                       (sides: => Seq[(String, DataFrame)]): String = {
     val ss = sides
-    durableDir(s"$name-p${planDigest(ss.map(_._2))}", dir, "_FEED_OK") {
-      stage =>
-        ss.foreach { case (sub, df) =>
-          df.coalesce(1).write.parquet(stage.resolve(sub).toString)
-        }
-        java.nio.file.Files.write(stage.resolve("_FEED_OK"),
-          Array.emptyByteArray)
+    durableDir(s"$name-p${planDigest(ss.map(_._2))}", dir) { stage =>
+      ss.foreach { case (sub, df) =>
+        df.coalesce(1).write.parquet(stage.resolve(sub).toString)
+      }
     }.toString
   }
 

@@ -22,6 +22,27 @@ import org.apache.spark.sql.functions._
 object Surface10Queries extends QueryModule {
   import Tables._
 
+  /** The events table partitioned into `event_type=...` directories
+    * (`events/`) beside a 5-row event-type → category dim (`dim_cat/`),
+    * staged once per sf: q87 prunes the partitions statically, q99
+    * dynamically through the dim. The dim must be a SCANNABLE relation
+    * (a LocalRelation never gets a DPP subquery — probed on 4.1.2), so
+    * it is staged like any real catalog dim.
+    */
+  private[queries] def eventsByType(s: SparkSession,
+      dir: String): java.nio.file.Path =
+    Stage.durableDir("events-by-type", dir) { st =>
+      import s.implicits._
+      Tables.events(s, dir)
+        .select("event_id", "ts", "user_id", "value", "event_type")
+        .write.partitionBy("event_type").parquet(st.resolve("events").toString)
+      Seq(
+        ("click", "engagement"), ("view", "engagement"),
+        ("purchase", "conversion"), ("signup", "conversion"),
+        ("error", "ops")).toDF("event_type", "category")
+        .coalesce(1).write.parquet(st.resolve("dim_cat").toString)
+    }
+
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Bucketed co-located join: write orders and the per-order lineitem
     // revenue state as 8-bucket tables hashed on the order key, then
@@ -34,47 +55,42 @@ object Surface10Queries extends QueryModule {
     // then the conf is restored so later queries in the same session
     // keep their broadcast plans.
     "q86_bucketed_join" -> ((s, dir) => {
-      // The two bucketed tables are a FIXTURE, staged once per sf under
-      // a deterministic durable path (Stage.fixtureDir — /tmp is swept
-      // between sessions) and reused when complete (_SUCCESS-gated,
-      // same pattern as q87's partitioned copy): r9 showed the in-query
-      // rewrite — aggregate lineitem + write two bucketed tables every
-      // run — was ~90% of the timed line. At 100 TB that write is paid
-      // once when the tables land, which is exactly the claim this
-      // query demonstrates; only the shuffle-free join is the query.
+      // The two bucketed tables are a FIXTURE, staged once per sf
+      // (Stage.durableDir): r9 showed the in-query rewrite — aggregate
+      // lineitem + write two bucketed tables every run — was ~90% of
+      // the timed line. At 100 TB that write is paid once when the
+      // tables land, which is exactly the claim this query
+      // demonstrates; only the shuffle-free join is the query.
       val sfKey = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val stage = Stage.fixtureDir("q86", dir)
-      // Bucket layout lives in the catalog, not the files: a fresh JVM
-      // finding the staged files re-registers the table over them with
-      // the same CLUSTERED BY spec instead of rewriting.
-      def ensure(table: String, sub: String, key: String,
-                 df: => DataFrame): Unit = {
-        val path = s"$stage/$sub"
-        val done = java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$path/_SUCCESS"))
-        if (!done) {
-          s.sql(s"DROP TABLE IF EXISTS $table")
-          df.write.mode("overwrite").option("path", path)
-            .bucketBy(8, key).sortBy(key).saveAsTable(table)
-        } else if (!s.catalog.tableExists(table)) {
-          s.sql(s"""CREATE TABLE $table (${df.schema.toDDL})
-            USING parquet CLUSTERED BY ($key) SORTED BY ($key)
-            INTO 8 BUCKETS LOCATION '$path'""")
+      // Bucket layout lives in the catalog, not the files: the staged
+      // files are written through a throwaway catalog entry, and every
+      // session registers its table over the PUBLISHED copy with the
+      // same CLUSTERED BY spec.
+      def bucketed(sub: String, key: String, df: DataFrame): String = {
+        val table = s"q86_${sub}_$sfKey"
+        val path = Stage.durableDir(s"q86-$sub", dir) { st =>
+          df.write.mode("overwrite").option("path", st.toString)
+            .bucketBy(8, key).sortBy(key).saveAsTable(s"${table}_staging")
+          s.sql(s"DROP TABLE ${table}_staging")
         }
+        s.sql(s"""CREATE TABLE IF NOT EXISTS $table (${df.schema.toDDL})
+          USING parquet CLUSTERED BY ($key) SORTED BY ($key)
+          INTO 8 BUCKETS LOCATION '$path'""")
+        table
       }
-      ensure(s"q86_lines_$sfKey", "lines", "l_orderkey",
+      val lines = bucketed("lines", "l_orderkey",
         t(s, dir, "lineitem")
           .groupBy(col("l_orderkey"))
           .agg(count(lit(1)).as("n_lines"),
             dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
               .as("revenue")))
-      ensure(s"q86_orders_$sfKey", "orders", "o_orderkey",
+      val orders = bucketed("orders", "o_orderkey",
         t(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice"))
       val tmp = Stage.tempDir("graft-q86-run-").toString
       graft.Graft.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val joined = s.table(s"q86_orders_$sfKey")
-          .join(s.table(s"q86_lines_$sfKey"),
+        val joined = s.table(orders)
+          .join(s.table(lines),
             col("o_orderkey") === col("l_orderkey"))
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("n_lines"), col("revenue"))
@@ -93,20 +109,12 @@ object Surface10Queries extends QueryModule {
     // (not a plan-string grep). The 100 TB read of "one event type out
     // of fifty" then lists 2% of the files before a single byte moves.
     "q87_partition_prune" -> ((s, dir) => {
-      // the partitioned copy is a FIXTURE, staged once per sf under a
-      // deterministic path and reused when complete (the _SUCCESS
-      // marker gates reuse) — so the judged/benched time is the pruned
-      // scan (~0.3 s), not an events-table rewrite. r7 showed the
-      // in-query rewrite amplifies host contention 25× (1.2 s clean →
-      // 31.8 s contended): fixture setup was dominating the line.
-      val stage = Stage.fixtureDir("q87", dir)
-      val events = s"$stage/events"
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$events/_SUCCESS"))) {
-        Tables.events(s, dir)
-          .select("event_id", "ts", "user_id", "value", "event_type")
-          .write.mode("overwrite").partitionBy("event_type").parquet(events)
-      }
+      // the partitioned copy is a FIXTURE, staged once per sf, so the
+      // judged/benched time is the pruned scan (~0.3 s), not an
+      // events-table rewrite. r7 showed the in-query rewrite amplifies
+      // host contention 25× (1.2 s clean → 31.8 s contended): fixture
+      // setup was dominating the line.
+      val events = eventsByType(s, dir).resolve("events").toString
       val pruned = s.read.parquet(events)
         .where(col("event_type") === "click")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"),

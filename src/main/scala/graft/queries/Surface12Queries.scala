@@ -185,32 +185,12 @@ object Surface12Queries extends QueryModule {
     // the partitions whose keys survive the dim filter — the "join to
     // a 2-of-50-category dim" 100 TB read skips 96% of the files
     // before a byte moves, with no literal in the query to push down.
-    // The plan is REQUIRED to carry the dynamic filter; reuses q87's
-    // staged partitioned fixture (same deterministic path)
+    // The plan is REQUIRED to carry the dynamic filter; reads q87's
+    // staged partitioned fixture
     "q99_dpp" -> ((s, dir) => {
-      val stage = Stage.fixtureDir("q87", dir)
-      val events = s"$stage/events"
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$events/_SUCCESS"))) {
-        Tables.events(s, dir)
-          .select("event_id", "ts", "user_id", "value", "event_type")
-          .write.mode("overwrite").partitionBy("event_type").parquet(events)
-      }
-      import s.implicits._
-      // the dim must be a SCANNABLE relation (a LocalRelation never
-      // gets a DPP subquery — probed on 4.1.2); stage it beside the
-      // fact fixture like any real catalog dim
-      val dimPath = s"$stage/dim_cat"
-      if (!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$dimPath/_SUCCESS"))) {
-        Seq(
-          ("click", "engagement"), ("view", "engagement"),
-          ("purchase", "conversion"), ("signup", "conversion"),
-          ("error", "ops")).toDF("event_type", "category")
-          .coalesce(1).write.mode("overwrite").parquet(dimPath)
-      }
-      val dim = s.read.parquet(dimPath)
-      val joined = s.read.parquet(events)
+      val staged = Surface10Queries.eventsByType(s, dir)
+      val dim = s.read.parquet(staged.resolve("dim_cat").toString)
+      val joined = s.read.parquet(staged.resolve("events").toString)
         .join(dim.where(col("category") === "engagement"), "event_type")
         .groupBy(col("event_type").cast("string").as("event_type"))
         .agg(count(lit(1)).as("n"),

@@ -260,7 +260,7 @@ object Surface22Queries extends QueryModule {
     // time, so the output is invariant to which batch the engine
     // fires in, and the c33 oracle transfers verbatim.
     "c36_stream_attribution_tws" -> ((s, dir) => {
-      val b = EventFeed.build(s, dir, "graft-c33-", perCampaign = true,
+      val b = EventFeed.build(s, dir, perCampaign = true,
         windowOf = (lo, hi) => 2 * ((hi - lo) / 3 + 1) + 1,
         sentinelGaps = Seq(10L, 20L))
       val res = EventFeed.runStream(s, "graft-c33-", EventFeed.rocksDbState,
@@ -281,7 +281,7 @@ object Surface22Queries extends QueryModule {
     // all) — order-independent integer rollup, one oracle. Shares the
     // staged c34 feed.
     "c37_stream_last3" -> ((s, dir) => {
-      val b = EventFeed.build(s, dir, "graft-c34-", perCampaign = false,
+      val b = EventFeed.build(s, dir, perCampaign = false,
         windowOf = (_, _) => 0L, sentinelGaps = Seq.empty)
       val res = EventFeed.runStream(s, "graft-c34-", EventFeed.rocksDbState,
           "append", EventFeed.AppendBatches)(
@@ -302,7 +302,7 @@ object Surface22Queries extends QueryModule {
     // implementations of one semantic (batch window, fMGWS state
     // walk, TWS map state). Shares the staged c34 feed.
     "c38_stream_multitouch_map" -> ((s, dir) => {
-      val b = EventFeed.build(s, dir, "graft-c34-", perCampaign = false,
+      val b = EventFeed.build(s, dir, perCampaign = false,
         windowOf = (_, _) => 0L, sentinelGaps = Seq.empty)
       val res = EventFeed.runStream(s, "graft-c34-", EventFeed.rocksDbState,
           "append", EventFeed.AppendBatches)(

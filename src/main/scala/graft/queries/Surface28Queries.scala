@@ -70,6 +70,24 @@ object Surface28Queries extends QueryModule {
     "2.5758293035489", "2.3263478740408408", "2.17009037758456",
     "2.053748910631822", "1.9599639845400536")
 
+  /** The new-vector stream of the ingest twins (c46, c48): the
+    * embeddings with vec_id % 4 = 0, staged as two chunks (vec_id % 8
+    * = 0, then the rest) and read one file per micro-batch.
+    */
+  private[queries] def vectorDeltaStream(s: SparkSession,
+      dir: String): DataFrame = {
+    val delta = t(s, dir, "embeddings").where(col("vec_id") % 4 === 0)
+      .select("vec_id", "embedding")
+    val feed = Stage.durableChunkFeed("feed-vec-delta", dir)(Seq(
+      delta.where(col("vec_id") % 8 === 0),
+      delta.where(col("vec_id") % 8 =!= 0)))
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType))))
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(feed)
+  }
+
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Pair stage through the native codegen vec_dot (the e1_embed_neardup
     // discipline: the left-to-right double fold is bit-agreed with the
@@ -182,16 +200,7 @@ object Surface28Queries extends QueryModule {
       val vd = (a: org.apache.spark.sql.Column,
                 b: org.apache.spark.sql.Column) =>
         call_function("vec_dot", a, b)
-      val all = t(s, dir, "embeddings")
-      val delta = all.where(col("vec_id") % 4 === 0)
-        .select("vec_id", "embedding")
-      val corpus = all.where(col("vec_id") % 4 =!= 0)
-      val feed = Stage.durableChunkFeed("feed-c46", dir)(Seq(
-        delta.where(col("vec_id") % 8 === 0),
-        delta.where(col("vec_id") % 8 =!= 0)))
-      val schema = StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
+      val corpus = t(s, dir, "embeddings").where(col("vec_id") % 4 =!= 0)
       val cents = Similarity.syntheticCentroids(SimilarityQueries.ivfN, 64)
       EventFeed.runStream(s, "graft-c46-", Nil, "update",
           EventFeed.EachBatch((batch, _, out) =>
@@ -201,8 +210,7 @@ object Surface28Queries extends QueryModule {
                 pairCosine = (a, b, na, nb) =>
                   vd(a, b) / (sqrt(na) * sqrt(nb)))
               .write.mode("append").parquet(out)))(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(feed))
+        vectorDeltaStream(s, dir))
         .output.distinct()
     }),
 

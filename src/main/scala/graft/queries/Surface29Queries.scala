@@ -110,6 +110,22 @@ object Surface29Queries extends QueryModule {
         f.selectedPartitions.toPartitionArray.map(_.filePath.toString).toSeq
     }.flatten
 
+  /** e54's incremental-dedup split of the candidate graph: the standing
+    * component labels of its corpus-internal part (doc_id % 10 ≠ 0),
+    * staged once, and the delta edges (every pair touching a delta
+    * doc). Shared by e180 and its streaming twin c47.
+    */
+  private def componentsSplit(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val pairs = DedupQueries.candidatePairs(s, dir)
+    val base = Stage.durableFrame(s, "cc-base", dir) {
+      Dedup.connectedComponents(
+        pairs.where(col("id_a") % 10 =!= 0 && col("id_b") % 10 =!= 0),
+        "id_a", "id_b")
+    }
+    (base, pairs.where(col("id_a") % 10 === 0 || col("id_b") % 10 === 0))
+  }
+
   /** The query vector (vec_id 0, one driver row — the ivfTopK qScore
     * discipline) and its `nprobe` best cells via
     * [[graft.operators.VectorIndex.probeCells]] — the same total
@@ -139,15 +155,11 @@ object Surface29Queries extends QueryModule {
       // every parameter the staged bytes depend on must be in the
       // key, or an edit serves stale data); durableDir supplies the
       // atomic staging-dir/rename protocol two racing JVMs need
-      val cdig = java.security.MessageDigest.getInstance("MD5")
-        .digest(cents.flatten.mkString(",").getBytes("UTF-8"))
-        .take(4).map("%02x".format(_)).mkString
-      val fix = Stage.durableDir(s"e178-ivf-layout-$cdig", dir,
-          "_LAYOUT_OK") { st =>
+      val fix = Stage.durableDir(
+          s"e178-ivf-layout-${Stage.digest(cents.flatten.mkString(","))}",
+          dir) { st =>
         VectorIndex.build(t(s, dir, "embeddings"), "embedding", cents,
           st.resolve("embeddings_by_cell").toString)
-        java.nio.file.Files.write(st.resolve("_LAYOUT_OK"),
-          Array.emptyByteArray)
         ()
       }
       val corpus = fix.resolve("embeddings_by_cell").toString
@@ -187,14 +199,7 @@ object Surface29Queries extends QueryModule {
     // the FULL candidate graph — that equality IS the judged
     // contract (same oracle text).
     "e180_components_delta" -> ((s, dir) => {
-      val pairs = DedupQueries.candidatePairs(s, dir)
-      val baseLabels = Stage.durableFrame(s, "cc-base", dir) {
-        Dedup.connectedComponents(
-          pairs.where(col("id_a") % 10 =!= 0 && col("id_b") % 10 =!= 0),
-          "id_a", "id_b")
-      }
-      val deltaEdges = pairs
-        .where(col("id_a") % 10 === 0 || col("id_b") % 10 === 0)
+      val (baseLabels, deltaEdges) = componentsSplit(s, dir)
       Dedup.connectedComponentsDelta(baseLabels, deltaEdges,
           "id_a", "id_b")
         .select(col("id").as("doc_id"), col("component"))
@@ -218,14 +223,7 @@ object Surface29Queries extends QueryModule {
     // table is chunk-split invariant and e15's oracle judges it
     // verbatim.
     "c47_stream_components" -> ((s, dir) => {
-      val pairs = DedupQueries.candidatePairs(s, dir)
-      val basePath = Stage.durableDir("cc-base", dir, "_SUCCESS") { stage =>
-        Dedup.connectedComponents(
-          pairs.where(col("id_a") % 10 =!= 0 && col("id_b") % 10 =!= 0),
-          "id_a", "id_b").write.mode("overwrite").parquet(stage.toString)
-      }
-      val deltaEdges = pairs
-        .where(col("id_a") % 10 === 0 || col("id_b") % 10 === 0)
+      val (baseLabels, deltaEdges) = componentsSplit(s, dir)
       val feed = Stage.durableChunkFeed("feed-c47", dir)(Seq(
         deltaEdges.where(col("id_a") % 2 === 0),
         deltaEdges.where(col("id_a") % 2 =!= 0)))
@@ -236,11 +234,10 @@ object Surface29Queries extends QueryModule {
       locally {
         val v0 = java.nio.file.Paths.get(tmp, "labels-v0")
         java.nio.file.Files.createDirectories(v0)
-        new java.io.File(basePath.toString).listFiles()
-          .filter(f => f.isFile && !f.getName.startsWith(".")
-            && !f.getName.startsWith("_"))
-          .foreach(f => java.nio.file.Files.copy(
-            f.toPath, v0.resolve(f.getName)))
+        baseLabels.inputFiles.foreach { f =>
+          val src = java.nio.file.Paths.get(new java.net.URI(f))
+          java.nio.file.Files.copy(src, v0.resolve(src.getFileName))
+        }
       }
       @volatile var last = 0L
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -290,22 +287,10 @@ object Surface29Queries extends QueryModule {
       val layout = s"$tmp/index"
       VectorIndex.build(all.where(col("vec_id") % 4 =!= 0),
         "embedding", cents, layout)
-      val delta = all.where(col("vec_id") % 4 === 0)
-        .select("vec_id", "embedding")
-      val feed = Stage.durableChunkFeed("feed-c48", dir)(Seq(
-        delta.where(col("vec_id") % 8 === 0),
-        delta.where(col("vec_id") % 8 =!= 0)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
       EventFeed.runStream(s, "graft-c48-", Nil, "update",
           EventFeed.EachBatch((batch, _, _) =>
             VectorIndex.append(batch, "embedding", cents, layout)))(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(feed))
+        Surface28Queries.vectorDeltaStream(s, dir))
       val (q, qCells) = probeCells(s, dir, cents, 2)
       val probed = VectorIndex.probe(s, layout, q, qCells, 10,
         "vec_id", "embedding", dedupKey = true,
@@ -431,28 +416,10 @@ object Surface29Queries extends QueryModule {
     // The raw doubles are PASSTHROUGH values (one row's value, never
     // summed), so they hash identically cross-engine.
     "c50_tws_state_audit" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-      // the c23 feed verbatim (shared durable stage): key on
-      // event_type × user-bucket, seq = event_id
-      val feed = Stage.durableChunkFeed("feed-c23", dir)(Seq(
-        ev.select(
-          concat(col("event_type"), lit("-"),
-            (col("user_id") % 64).cast("string")).as("key"),
-          col("event_id").as("seq"),
-          col("value"))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("seq",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType)))
       val run = EventFeed.runStream(s, "graft-c50-", EventFeed.rocksDbState,
           "append", EventFeed.NoSink)(
         graft.streaming.StatefulOps.orderedDeltaStream(
-          s.readStream.schema(schema).parquet(feed)
-            .as[graft.streaming.StatefulOps.SeqValue]))
+          RuntimeQueries.seqValueStream(s, dir)))
       s.read.format("statestore").option("stateVarName", "last")
         .load(run.ckpt)
         .select(col("key.value").as("key"),

@@ -358,23 +358,7 @@ class Surface23Spec extends SparkSpec {
       // the query routes through a DURABLE fixture keyed by this
       // one-time tmp dir — sweep it, or every test run leaves a dead
       // target/graft-fixtures entry no later run can ever hit
-      val sfKey = tmp.toString.replaceAll("[^A-Za-z0-9]", "_")
-      val root = java.nio.file.Paths.get("target", "graft-fixtures")
-      if (java.nio.file.Files.isDirectory(root)) {
-        val listing = java.nio.file.Files.list(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          listing.iterator().asScala
-            .filter(_.getFileName.toString.contains(sfKey))
-            .foreach { p =>
-              val walk = java.nio.file.Files.walk(p)
-              try walk.sorted(java.util.Comparator.reverseOrder())
-                .iterator().asScala
-                .foreach(java.nio.file.Files.deleteIfExists(_))
-              finally walk.close()
-            }
-        } finally listing.close()
-      }
+      StageSpec.sweepFixtures(tmp.toString)
     }
   }
 }
